@@ -18,6 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from pipelines_rj_sms_spark.operators.conform import (
@@ -120,12 +121,19 @@ def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
         df = safe_cast_columns(df, cfg.casts)
 
     checks: list[CheckResult] = [non_empty(df)]
+    # untagged rows cannot be told apart after the write: keep the
+    # table's file listing so the read-back sees only this load's files
+    before = _table_files(spark, cfg.sink_path) if cfg.run_id is None else None
     # cfg.ts_col refers to the post-conform (cleaned) column name
     lakehouse.write_table(df, cfg.sink_path, mode=cfg.dump_mode, ts_col=cfg.ts_col)
 
     written = lakehouse.read_table(spark, cfg.sink_path)
     if cfg.run_id is not None:
         written = written.filter(written["_run_id"] == cfg.run_id)
+    else:
+        added = [f for f in written.inputFiles() if f not in before]
+        written = (spark.read.option("basePath", cfg.sink_path)
+                   .parquet(*added) if added else written.limit(0))
     checks.append(reconcile_counts(rows_read, written, cfg.reconcile_tolerance))
     if cfg.k_anon is not None:
         from pipelines_rj_sms_spark.quality.checks import (
@@ -138,6 +146,13 @@ def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
             {"quasi": quasi, "k": k, "violating_groups": n_bad}))
     rows_written = written.count()
     return IngestionReport(cfg.name, rows_read, rows_written, checks)
+
+
+def _table_files(spark: SparkSession, path: str) -> set[str]:
+    try:
+        return set(lakehouse.read_table(spark, path).inputFiles())
+    except AnalysisException:  # first load: no table (or no files) yet
+        return set()
 
 
 def run_many(spark: SparkSession, configs: list[IngestionConfig],

@@ -761,7 +761,13 @@ def link_prediction(edges: DataFrame, src: str = "src",
     range and u < v is preserved, so the candidate multiset, the
     anti-join semantics and every score are unchanged; decode restores
     the input id dtype. Non-integral or out-of-range ids fall back to
-    the two-column spelling.
+    the two-column spelling; ``packed_keys=True`` raises ValueError on
+    them instead.
+
+    EAGER EXECUTION CONTRACT: unless ``packed_keys=False``, calling this
+    function runs a Spark job at construction time (the id-range
+    aggregate above, which also fills the edge-list cache) — pass
+    ``packed_keys=False`` for a purely lazy plan.
     """
     # persist the (possibly expensive to derive) edge set: it feeds
     # the symmetrization twice AND the final anti-join
@@ -811,21 +817,25 @@ def link_prediction(edges: DataFrame, src: str = "src",
               .select("_aau", "_u",
                       F.explode(F.slice(F.col("_nb"), F.col("_i") + 2,
                                         F.size("_nb"))).alias("_v")))
-    # packed-key auto-detect: one bounded aggregate (two scalars) over
+    # packed-key range check: one bounded aggregate (two scalars) over
     # the persisted edge list — the same driver-scalar discipline and
     # detection rule as triangle_counts; it doubles as the cache fill
     # for und, whose lazy persist the sets/anti-join consumers would
-    # otherwise race.
-    if packed_keys is None:
-        dt = dict(und.dtypes)["_a"]
-        if dt in ("int", "bigint", "smallint", "tinyint"):
+    # otherwise race. An explicit packed_keys=True is checked too: an
+    # id outside [0, 2^31) would collide in u << 32 | v.
+    if packed_keys is not False:
+        fits = False
+        if dict(und.dtypes)["_a"] in ("int", "bigint", "smallint",
+                                      "tinyint"):
             mm = und.agg(
                 F.min(F.least("_a", "_b")).alias("mn"),
                 F.max(F.greatest("_a", "_b")).alias("mx")).first()
-            packed_keys = (mm["mn"] is not None and mm["mn"] >= 0
-                           and mm["mx"] < (1 << 31))
-        else:
-            packed_keys = False
+            fits = mm["mn"] is None or (mm["mn"] >= 0
+                                        and mm["mx"] < (1 << 31))
+        if packed_keys and not fits:
+            raise ValueError("packed_keys=True needs integer node ids "
+                             "in [0, 2^31)")
+        packed_keys = fits
     # existing-edge anti-join strategy: the edge side carries a
     # SHUFFLE_HASH hint. Unhinted, Catalyst broadcasts the edge
     # projection and pushes the anti-join below the candidate

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 ENGINE_DEFAULTS: dict[str, str] = {
@@ -39,30 +40,22 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.sql.legacy.javaCharsets": "true",
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # At 100 TB the default 128m split is fine; shuffle partitions are
-    # sized by AQE from this initial value. The value is the INITIAL
-    # hint only (AQE coalesces down to advisoryPartitionSizeInBytes);
-    # env-overridable so a cluster deployment raises it to ~2-3x total
-    # cores without a code change — the local default keeps the
-    # driver's bench comparable across rounds (r12, guide §2.2/§9).
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
+    # spark.sql.shuffle.partitions is absent on purpose: it is the initial
+    # hint AQE coalesces down from, and persist()ed frames freeze it, so a
+    # count fixed for one box cuts cached rescans into tiny tasks on a
+    # smaller one. get_spark sizes it from a local session's cores; on a
+    # cluster, spark-submit's --conf (or Spark's default) stands.
     # Scale-adaptive reduce parallelism (r13, guide §2.2): AQE can only
-    # coalesce partitions DOWN from the initial number, never split
-    # them up, so a 32-partition initial hint that is right at sf0.1
-    # silently serializes data-bound reduce stages at 10x the data
-    # (measured on the ~sf1 heavy tier: part_link_prediction's 12 GB
-    # wedge exchange landed on 32 reduce tasks — 370 MB + ~8M hash-agg
-    # groups per task, all 32 sharing one executor heap → spill; the
-    # same query with a 512-way initial exchange runs 1.8x faster).
-    # The LOCAL DEFAULT stays unset (= shuffle.partitions) because the
-    # wide initial exchange costs real per-round overhead in the
-    # iterative graph operators at bench scale (A/B'd: headline suite
-    # 58.4 s → 68.2 s with a 512 default, concentrated in
-    # kcore/pagerank/LPA) — set SPARK_GRAFT_INITIAL_PARTITIONS on any
-    # deployment whose exchanges carry data-sized payloads (clusters:
-    # ~2-3x total cores; tools/heavy_bench.py sets 512 as its
-    # documented methodology). See OPTIMIZATION_r13.md.
+    # coalesce partitions DOWN from the initial number, never split them,
+    # so a core-sized hint serializes data-bound reduce stages at 10x the
+    # data (~sf1 heavy tier: part_link_prediction's 12 GB wedge exchange
+    # ran 1.8x faster 512-way than 32-way, which spilled). Left unset
+    # locally (= shuffle.partitions): the wide exchange costs per-round
+    # overhead in the iterative graph operators at bench scale (headline
+    # 58.4 s -> 68.2 s with a 512 default, in kcore/pagerank/LPA). Set
+    # SPARK_GRAFT_INITIAL_PARTITIONS where exchanges carry data-sized
+    # payloads (clusters: ~2-3x total cores; tools/heavy_bench.py sets
+    # 512). See OPTIMIZATION_r13.md.
     **({"spark.sql.adaptive.coalescePartitions.initialPartitionNum":
         os.environ["SPARK_GRAFT_INITIAL_PARTITIONS"]}
        if os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS") else {}),
@@ -86,7 +79,9 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset so the
     same entry point works in tests and under the driver harness; on a
-    real cluster pass ``None`` and let spark-submit decide.
+    real cluster pass ``None`` and let spark-submit decide. A local
+    session this call creates gets one shuffle partition per core
+    (``defaultParallelism``) unless ``extra_conf`` sets the count.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_CONNECT_MODE_ENABLED"):
@@ -94,11 +89,12 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    conf = dict(ENGINE_DEFAULTS)
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = {**ENGINE_DEFAULTS, **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)
+    size_shuffle = ((master or "").startswith("local")
+                    and "spark.sql.shuffle.partitions" not in conf
+                    and SparkContext._active_spark_context is None)
     # Executor Python workers must resolve this package no matter the
     # driver's cwd: a kernel that does `import pipelines_rj_sms_spark`
     # inside a pandas-UDF runs in a fresh worker whose sys.path has the
@@ -115,7 +111,11 @@ def get_spark(
     builder = builder.config(
         "spark.executorEnv.PYTHONPATH",
         os.environ["PYTHONPATH"])
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if size_shuffle:
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 def _footer_path(path: str) -> str:

@@ -90,7 +90,20 @@ _SLOW_CALLS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    modules = {}
     for item in items:
+        modules.setdefault(Path(item.fspath).name, getattr(item, "module", None))
         nodeid = f"{Path(item.fspath).name}::{item.originalname or item.name}"
         if nodeid in _SLOW_CALLS:
             item.add_marker(pytest.mark.slow)
+    # a renamed or deleted test must not silently leave the slow list:
+    # every entry must name a test function of an existing test file
+    here = Path(__file__).parent
+    stale = sorted(
+        e for e in _SLOW_CALLS
+        for fname, func in [e.split("::")]
+        if not (here / fname).exists()
+        or (fname in modules and not hasattr(modules[fname], func)))
+    if stale:
+        raise pytest.UsageError(
+            "_SLOW_CALLS entries match no test: " + ", ".join(stale))

@@ -1,5 +1,6 @@
 """PageRank / degrees (operators/graph.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.graph import degrees, pagerank
@@ -285,6 +286,16 @@ def test_link_prediction_packed_matches_unpacked(spark):
         [(1 << 31, 2), (2, 3)], ["src", "dst"])
     rows = {(r["src"], r["dst"]) for r in link_prediction(big).collect()}
     assert rows == {(3, 1 << 31)} or rows == {(1 << 31, 3)}
+
+
+def test_link_prediction_packed_keys_rejects_out_of_range_ids(spark):
+    """An explicit packed_keys=True must not silently collide ids: a
+    negative id or one at 2^31 raises instead of packing."""
+    from pipelines_rj_sms_spark.operators.graph import link_prediction
+    for bad in ((-1, 2), (2, 1 << 31)):
+        edges = spark.createDataFrame([bad, (2, 3)], ["src", "dst"])
+        with pytest.raises(ValueError, match="packed_keys"):
+            link_prediction(edges, packed_keys=True)
 
 
 def test_hits_hand_computed_two_iterations(spark):

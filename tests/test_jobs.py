@@ -61,6 +61,26 @@ def test_ingestion_append_then_overwrite_partition(spark, tmp_path):
     assert ids == ["1", "9"]  # day-1 row kept, day-2 row replaced
 
 
+def test_default_config_reconciles_each_append_against_its_own_rows(
+        spark, tmp_path):
+    """Without a run_id there is no tag to filter the read-back on: the
+    second nightly append must still be checked against its own 2 rows,
+    not the 4 the table now holds. Overwrite replaces its partition."""
+    sink = str(tmp_path / "lake_default")
+    reports = []
+    for night, mode in ((1, "append"), (2, "append"), (3, "overwrite")):
+        src = tmp_path / f"night{night}.csv"
+        src.write_text(f"id,ts\n{night}1,2024-01-01 00:00:00\n"
+                       f"{night}2,2024-01-02 00:00:00\n")
+        reports.append(run_ingestion(spark, IngestionConfig(
+            name="t", source_format="csv", source_path=str(src),
+            sink_path=sink, ts_col="ts", csv_sep=",", csv_encoding="utf-8",
+            dump_mode=mode)))
+    for rep in reports:
+        assert rep.ok and (rep.rows_read, rep.rows_written) == (2, 2), rep
+    assert spark.read.option("basePath", sink).parquet(sink).count() == 2
+
+
 def test_run_many(spark, tmp_path):
     a = tmp_path / "a.csv"
     a.write_text("x,ts\n1,2024-01-01 00:00:00\n")

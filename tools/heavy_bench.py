@@ -66,15 +66,19 @@ def _isolated(names: list[str]) -> None:
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), name],
             capture_output=True, text=True)
-        line = out.stdout.strip().splitlines()[-1] if out.stdout else ""
+        lines = out.stdout.strip().splitlines()
         try:
-            d = json.loads(line)
+            d = json.loads(lines[-1]) if out.returncode == 0 else {}
         except (json.JSONDecodeError, IndexError):
-            sys.stderr.write(f"{name}: subprocess failed\n"
+            d = {}
+        t = d.get("queries", {}).get(name)
+        if t is None:
+            sys.stderr.write(f"{name}: subprocess failed (exit "
+                             f"{out.returncode}), skipped\n"
                              + out.stderr[-2000:] + "\n")
             continue
-        timings[name] = d["queries"][name]
-        query_loadavg[name] = d["query_loadavg_1m"][name]
+        timings[name] = t
+        query_loadavg[name] = d.get("query_loadavg_1m", {}).get(name)
     print(json.dumps({
         "metric": "heavy-tier wall clock (isolated)",
         "value": round(sum(timings.values()), 3),
@@ -93,8 +97,9 @@ def main() -> None:
     # Cluster-posture reduce parallelism (documented methodology): the
     # heavy tier exists to measure DATA-bound scaling, and AQE can only
     # coalesce the initial partition number down, never split it up —
-    # with the local 32 default a ~12 GB exchange lands on 32 reduce
-    # tasks sharing one heap (spill, 1.8x slower). 512 is the
+    # with a core-count initial hint a ~12 GB exchange lands on a few
+    # reduce tasks sharing one heap (spill; 1.8x slower than 512-way
+    # at 32 cores, OPTIMIZATION_r13.md). 512 is the
     # production posture session.py documents for data-sized
     # exchanges; AQE coalesces small exchanges back to ~core count.
     os.environ.setdefault("SPARK_GRAFT_INITIAL_PARTITIONS", "512")
