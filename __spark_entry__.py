@@ -5236,8 +5236,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kcore_q(spark, sf_dir):
         """80-core of the part co-purchase graph: iterative peel (one
-        degree agg + two semi-joins per round, lineage-truncated).
-        The operator peels to the DETECTED fixpoint (edge count
+        semi-join + one exchange-free degree agg per round over the
+        cached both-orientation edge list, checkpointed each round).
+        The operator peels to the DETECTED fixpoint (alive-node count
         stable); the SQL oracle unrolls 6 rounds, which the fixture
         converges well inside — rounds past the fixpoint are no-ops
         by construction, so the two agree exactly."""
@@ -5617,8 +5618,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         full-batch GD logistic regression over hashed unigram features
         (poly bucket hash), trained to separate the English slice from
         the pool, then scored back over the corpus. Bit-deterministic:
-        integer-grid weights, exact BIGINT margins, pinned sigmoid,
-        grid_mean-rounded updates (operators/classify.py)."""
+        integer-grid weights, exact integer margins, pinned sigmoid,
+        grid_mean-rounded updates applied on the driver
+        (operators/classify.py)."""
         from pipelines_rj_sms_spark.operators.classify import (
             logreg_hashed_train, logreg_score)
         docs = _t(spark, sf_dir, "documents")

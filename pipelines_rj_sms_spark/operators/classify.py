@@ -44,8 +44,9 @@ from pipelines_rj_sms_spark.functions.numeric import \
 
 from pipelines_rj_sms_spark.functions.numeric import (LOG_SCALE,
                                                       det_log_units,
-                                                      det_sum)
+                                                      det_sum, pin_units)
 from pipelines_rj_sms_spark.functions.text import tokens
+from pipelines_rj_sms_spark.operators.cache import track
 
 __all__ = ["nb_train", "nb_score", "nb_predict"]
 
@@ -181,7 +182,6 @@ def classification_report(df: DataFrame, actual_col: str,
         .otherwise(F.lit(0.0))
     f1 = F.when(prec + rec > 0, 2.0 * prec * rec / (prec + rec)) \
         .otherwise(F.lit(0.0))
-    from pipelines_rj_sms_spark.operators.cache import track
     return track(
         out.select("label",
                    F.col("support").cast("bigint").alias("support"),
@@ -258,7 +258,6 @@ def binary_auc(df: DataFrame, score_col: str, label_col) -> DataFrame:
                                 F.count("*").alias("_t"))
     # distributed rank cumsum over the collapsed score support — no
     # SinglePartition exchange (operators/ids.global_cumsum)
-    from pipelines_rj_sms_spark.operators.cache import track
     from pipelines_rj_sms_spark.operators.ids import global_cumsum
     sv = global_cumsum(sv, ["_s"], ["_t"])
     d38 = "decimal(38,0)"
@@ -346,6 +345,22 @@ def brier_decomposition(df: DataFrame, prob_col: str, outcome_col: str,
 # --- hashed logistic regression (fastText-style quality classifier) ------
 
 
+def _weight_units(w: dict | None, bucket):
+    """Weight units of ``bucket`` under the driver-held weights ``w``
+    (bucket -> units): one dense BIGINT array literal over the
+    [min, max] bucket range, sent as a single string literal that
+    Catalyst constant-folds once. Buckets absent from ``w`` read 0."""
+    if not w:
+        return F.lit(0).cast("long")
+    lo, hi = min(w), max(w)
+    arr = F.split(F.lit(",".join(str(w.get(b, 0))
+                                 for b in range(lo, hi + 1))),
+                  ",").cast("array<bigint>")
+    return F.when(bucket.between(lo, hi),
+                  F.element_at(arr, (bucket - F.lit(lo - 1)).cast("int"))
+                  ).otherwise(F.lit(0).cast("long"))
+
+
 def logreg_hashed_train(df: DataFrame, target, text_col: str = "text",
                         id_col: str = "doc_id",
                         n_buckets: int = 256, n_iter: int = 5,
@@ -364,31 +379,32 @@ def logreg_hashed_train(df: DataFrame, target, text_col: str = "text",
     (id, b, tf, y) design frame for scoring reuse.
 
     Deterministic by the repo's integer-grid contract: weights live
-    on the 1e-6 unit grid, margins are exact BIGINT dot products of
+    on the 1e-6 unit grid, margins are exact DECIMAL(38,0) sums of
     (tf x weight-units), the sigmoid is the ONLY transcendental and
     is pinned to the grid immediately (``pin_units`` — same accepted
     libm-ulp flip surface as the pinned-ln family), residuals and
     gradients are exact DECIMAL(38,0) sums, and the update step
-    rounds lr*G/n half-away-from-zero in pure integer arithmetic
+    rounds lr*G/n half-away-from-zero in exact integer arithmetic
     (the ``grid_mean`` construction). Same inputs => bit-identical
     weights on any engine at any partitioning.
 
-    Scale shape (the HITS posture): the design frame is one token
-    explode + hash agg, persisted once and reused by all iterations;
-    each iteration is one broadcast equi-join with the <=n_buckets-row
-    weight frame, one per-doc hash agg, one per-bucket hash agg, and
-    a 1-row doc-count broadcast — O(n_iter) shuffles of narrow rows,
-    nothing driver-side, nothing O(n^2). Weight frames are persisted
-    per iteration (each is consumed by the next round AND the final
-    output) and carried on the returned frames' ledger.
+    Scale shape (the MLlib gradient-descent shape): the design frame
+    is one token explode + hash agg, hash-partitioned by id and
+    persisted once. Each iteration is ONE collect: the per-doc margin
+    is a window sum over (id, y) — no exchange, the frame is already
+    clustered by id — the pinned-sigmoid residual rides on every row,
+    and a per-bucket hash agg returns sum(tf x residual) and the row
+    count, at most ``n_buckets + 1`` rows (bounded by the model, not
+    the data; bucket -1's count is the doc count n). The update runs
+    on the driver in Python integers — the driver holds at most
+    ``n_buckets + 1`` weights — and the next round reads them from one
+    array literal (:func:`_weight_units`).
 
-    EAGER EXECUTION CONTRACT: calling this function runs Spark jobs
-    at construction time (the design frame is eagerly
-    ``localCheckpoint``-ed so per-iteration broadcasts don't re-derive
-    it) — it is an executor, not a lazy plan builder.
+    EAGER EXECUTION CONTRACT: training runs at call time (n_iter
+    collects); only the ``features`` persist stays on the returned
+    frames' release ledger, and it is unpersisted before any error
+    propagates.
     """
-    from pipelines_rj_sms_spark.functions.numeric import LOG_SCALE, pin_units
-    from pipelines_rj_sms_spark.operators.cache import track
     from pipelines_rj_sms_spark.operators.curation import feature_bucket
 
     toks = df.select(
@@ -407,68 +423,49 @@ def logreg_hashed_train(df: DataFrame, target, text_col: str = "text",
                   target.cast("int").alias("_y"),
                   F.lit(-1).cast("long").alias("_b"),
                   F.lit(1).cast("long").alias("_tf")))
-    # pin the cached design frame's partitioning to _id (r12): the
-    # margin agg groups by (_id, _y), the gradient step joins back on
-    # _id, and the final score groups by (_id, _y) — all of them are
-    # satisfied by hash(_id) via the subset-clustering rule, so one
-    # repartition at build time replaces a full design-frame Exchange
-    # in EVERY iteration (2 per round + 1 in logreg_score). Row values
-    # are untouched — only placement changes. Eager checkpoint, not a
-    # persist (r12): each iteration's weight broadcast is a separate
-    # AQE job, and with a cache every one of them re-derived the
-    # tokenize+hash design build from source — measured 24.6 s
-    # executorRunTime lazy-cached and 26.9 s even with an eager
-    # count() fill (the broadcast jobs miss the plan-keyed entry),
-    # vs 1.2 s with the checkpoint. The checkpoint also pins the
-    # hash(_id) placement the loop relies on.
-    feat = feat.repartition("_id").localCheckpoint()
-    pins = []
-
-    n_docs = F.broadcast(
-        df.agg(F.count("*").cast("decimal(38,0)").alias("_n")))
-    w = feat.select("_b").distinct().withColumn(
-        "_wu", F.lit(0).cast("long"))
-    for _ in range(n_iter):
-        w = track(w.persist())
-        pins.append(w)
-        # exact integer margin units, one broadcast join + hash agg;
-        # accumulated in DECIMAL(38,0) like the gradient sum — the
-        # DuckDB oracle sums in HUGEINT, so a LONG here would overflow
-        # (ANSI error / wrap) before the oracle does at extreme
-        # corpus-scale tf x weight-unit products
-        m = (feat.join(F.broadcast(w), "_b")
-             .groupBy("_id", "_y")
-             .agg(F.sum((F.col("_tf") * F.col("_wu"))
-                        .cast("decimal(38,0)")).alias("_mu")))
-        # pinned sigmoid (the only transcendental; grid flip surface
-        # is per DISTINCT margin — the pinned-ln contract)
-        p = m.select(
-            "_id",
-            (pin_units(F.lit(1.0)
-                       / (F.lit(1.0)
-                          + F.exp(-(F.col("_mu").cast("double")
-                                    / F.lit(float(LOG_SCALE))))))
-             - F.col("_y") * F.lit(LOG_SCALE)).alias("_ru"))
-        g = (feat.join(p, "_id")
-             .groupBy("_b")
-             .agg(F.sum((F.col("_tf") * F.col("_ru"))
-                        .cast("decimal(38,0)")).alias("_g")))
-        # exact half-away-from-zero Δu = round(lr*G / n): the
-        # grid_mean construction — a - a%b is exactly divisible
-        a = F.abs(F.col("_g")) * F.lit(2 * lr_num) + F.col("_n") * F.lit(lr_den)
-        b = F.col("_n") * F.lit(2 * lr_den)
-        du = ((a - a % b) / b).cast("long") * \
-            F.when(F.col("_g") < 0, F.lit(-1)).otherwise(F.lit(1))
-        w = (w.join(g.crossJoin(n_docs), "_b", "left")
-             .select("_b",
-                     (F.col("_wu") - F.coalesce(du, F.lit(0)))
-                     .alias("_wu")))
-    weights = track(w.select(F.col("_b").alias("b"), F.col("_wu").alias("wu")),
-                    *pins)
+    # hash(_id) placement satisfies every round's margin window over
+    # (_id, _y) and logreg_score's (id, y) agg (subset clustering), and
+    # the in-partition sort is the window's required ordering — so one
+    # exchange + sort at build time serves every round
+    feat = (feat.repartition("_id").sortWithinPartitions("_id", "_y")
+            .persist())
+    w = None
+    try:
+        for _ in range(n_iter):
+            mu = F.sum((F.col("_tf") * _weight_units(w, F.col("_b")))
+                       .cast("decimal(38,0)")).over(
+                Window.partitionBy("_id", "_y"))
+            # pinned sigmoid (the only transcendental; grid flip
+            # surface is per DISTINCT margin — the pinned-ln contract)
+            ru = (pin_units(F.lit(1.0) / (F.lit(1.0) + F.exp(
+                      -(mu.cast("double") / F.lit(float(LOG_SCALE))))))
+                  - F.col("_y") * F.lit(LOG_SCALE))
+            rows = (feat.select("_b", "_tf", ru.alias("_ru"))
+                    .groupBy("_b")
+                    .agg(F.sum((F.col("_tf") * F.col("_ru"))
+                               .cast("decimal(38,0)")).alias("_g"),
+                         F.count("*").alias("_c"))
+                    .collect())
+            n = next((r["_c"] for r in rows if r["_b"] == -1), 0)
+            # exact half-away-from-zero Δu = round(lr*G / n): the
+            # grid_mean construction — a - a%b is exactly divisible
+            old, w, b = w or {}, {}, 2 * n * lr_den
+            for r in rows:
+                g = int(r["_g"])
+                a = abs(g) * 2 * lr_num + n * lr_den
+                w[r["_b"]] = (old.get(r["_b"], 0)
+                              - (a - a % b) // b * (-1 if g < 0 else 1))
+        if w is None:
+            w = {r["_b"]: 0 for r in feat.select("_b").distinct().collect()}
+    except BaseException:
+        feat.unpersist()
+        raise
+    weights = feat.sparkSession.createDataFrame(sorted(w.items()),
+                                                "b long, wu long")
     features = track(feat.select(F.col("_id").alias(id_col),
                                  F.col("_y").alias("y"),
                                  F.col("_b").alias("b"),
-                                 F.col("_tf").alias("tf")), *pins)
+                                 F.col("_tf").alias("tf")), feat)
     return weights, features
 
 
@@ -478,20 +475,20 @@ def logreg_score(features: DataFrame, weights: DataFrame,
     weight frame: (id, y, margin, prob, predicted). Margin is the
     exact integer dot product emitted on the 1e-6 grid; prob is the
     pinned sigmoid of that margin; predicted = prob >= 0.5 (margin
-    sign — exact). One broadcast equi-join + one hash agg."""
-    from pipelines_rj_sms_spark.functions.numeric import LOG_SCALE, pin_units
-
+    sign — exact). The (at most n_buckets + 1) weights are collected
+    and read through the training loop's array literal; the score is
+    one hash agg, exchange-free on the id-partitioned design frame."""
+    w = {r["b"]: r["wu"] for r in weights.collect()}
     # DECIMAL(38,0) margin accumulation for engine symmetry with the
     # oracle's HUGEINT sum (same contract as the training loop)
-    m = (features.join(F.broadcast(weights), "b")
-         .groupBy(F.col(id_col), F.col("y"))
-         .agg(F.sum((F.col("tf") * F.col("wu"))
+    m = (features.groupBy(F.col(id_col), F.col("y"))
+         .agg(F.sum((F.col("tf") * _weight_units(w, F.col("b")))
                     .cast("decimal(38,0)")).alias("_mu")))
     margin = F.col("_mu").cast("double") / F.lit(float(LOG_SCALE))
     prob = pin_units(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))) \
         / F.lit(float(LOG_SCALE))
-    return m.select(
+    return track(m.select(
         F.col(id_col), F.col("y"),
         margin.alias("margin"),
         prob.alias("prob"),
-        (F.col("_mu") >= 0).cast("int").alias("predicted"))
+        (F.col("_mu") >= 0).cast("int").alias("predicted")), features)

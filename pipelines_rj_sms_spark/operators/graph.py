@@ -363,73 +363,71 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     cleaning pass before community/centrality analysis (drops pendant
     chains and weak periphery that inflate linkage clusters).
 
-    Iteration state is the ALIVE-NODE SET, not the edge list (r12):
-    the canonical edge list is cached ONCE and every peel round is a
-    single scan of it — two semi-joins against the (small, broadcast)
-    alive set, one exploded-endpoint degree hash-aggregation, and a
-    lazy ``localCheckpoint`` + count of the new alive set (node-scale
-    rows, so the per-round materialization is |nodes|, not |edges|).
-    The previous spelling localCheckpoint-ed the FULL edge list every
-    round and scanned that materialization three times per round
-    (degree union x2 + semi-join input) — at sf0.1 that was ~190 MB of
-    deserialized row blocks re-read per round for an 11 MB edge set,
-    and at 100 TB it would re-materialize the corpus-scale edge list
-    O(rounds) times. Round arithmetic is IDENTICAL (induced degrees
-    over the alive set = degrees of the peeled edge list), so the
-    fixpoint and the returned frame are unchanged.
+    Iteration state is the ALIVE-NODE SET, not the edge list: the
+    canonical edge list is cached ONCE in both orientations,
+    hash-partitioned by the receiving endpoint ``_a`` (the
+    label_propagation posture), and a peel round is one semi-join of
+    ``_b`` against the (small, planner-broadcast) alive set, an
+    exchange-free ``groupBy(_a)`` count and the ``degree >= k``
+    filter, materialized by one eager ``localCheckpoint`` (node-scale
+    rows) whose ``observe()`` metric counts the new alive set — two
+    jobs per steady round (the alive-set broadcast and the
+    checkpoint), run at call time. No ``_a`` semi-join is needed: a
+    peeled node's degree over the current alive set is at most the
+    degree that peeled it (< k), so the filter drops it; survivors get
+    exactly their induced degree, so the fixpoint and the returned
+    frame are those of peeling the edge list itself.
 
     Convergence is DETECTED, not assumed: peeling is monotone, so an
     unchanged alive-node count means no node fell below k — the true
     fixpoint. Most real graphs converge in a handful of rounds, but
     adversarial shapes (long pendant chains shed one tip per round)
     need O(diameter); if ``max_rounds`` is hit first the function
-    RAISES rather than silently returning a superset of the core.
+    RAISES rather than silently returning a superset of the core. The
+    edge cache is unpersisted before returning or raising: the result
+    is checkpointed, so nothing is left on the release ledger.
     Returns (node, degree) of the surviving core with its within-core
     degree.
     """
-    from pipelines_rj_sms_spark.operators.cache import track
+    from pyspark.sql import Observation
 
     if edges_canonical:  # src < dst deduped by contract: skip the
-        e = (edges.select(F.col(src).alias("_a"),  # canonicalize pass
-                          F.col(dst).alias("_b"))
-             .persist())
+        e = edges.select(F.col(src).alias("_a"),  # canonicalize pass
+                         F.col(dst).alias("_b"))
     else:
         e = (edges.select(F.least(F.col(src), F.col(dst)).alias("_a"),
                           F.greatest(F.col(src), F.col(dst)).alias("_b"))
              .filter(F.col("_a") != F.col("_b"))
-             .distinct()
-             .persist())
+             .distinct())
+    e = (e.unionByName(e.select(F.col("_b").alias("_a"),
+                                F.col("_a").alias("_b")))
+         .repartition("_a").persist())
     alive = None          # None = every node alive (round 1)
     n_alive = None
-    deg_kept = None
-    converged = False
-    for _ in range(max_rounds):
-        ef = e
-        if alive is not None:
-            ef = (e.join(alive.withColumnRenamed("node", "_a"),
-                         "_a", "semi")
-                  .join(alive.withColumnRenamed("node", "_b"),
-                        "_b", "semi"))
-        deg = (ef.select(F.explode(F.array("_a", "_b")).alias("node"))
-               .groupBy("node").agg(F.count("*").alias("degree")))
-        deg_kept = deg.filter(F.col("degree") >= k).localCheckpoint(False)
-        alive = deg_kept.select("node")
-        m = deg_kept.count()
-        if m == 0 or m == n_alive:
-            converged = True
-            break
-        n_alive = m
-    if not converged:
-        # free the persisted edge cache before raising — on the
-        # failure path no track() ledger is attached, so without this
-        # the edge blocks would pin executor storage for the session
-        e.unpersist()
+    try:
+        for _ in range(max_rounds):
+            ef = e if alive is None else e.join(
+                alive.withColumnRenamed("node", "_b"), "_b", "semi")
+            obs = Observation()
+            deg_kept = (ef.groupBy("_a").agg(F.count("*").alias("degree"))
+                        .filter(F.col("degree") >= k)
+                        .select(F.col("_a").alias("node"), "degree")
+                        .observe(obs, F.count("*").alias("n"))
+                        .localCheckpoint())
+            alive = deg_kept.select("node")
+            m = obs.get["n"]
+            if m == 0 or m == n_alive:
+                return deg_kept
+            n_alive = m
         raise RuntimeError(
             f"k_core did not reach its fixpoint within {max_rounds} "
             f"rounds ({n_alive} nodes still peeling); raise max_rounds "
             "— the result would otherwise be a superset of the true "
             f"{k}-core.")
-    return track(deg_kept, e)
+    finally:
+        # each round is materialized by its checkpoint, so the edge
+        # cache is dead once the loop exits, on either path
+        e.unpersist()
 
 
 def project_bipartite(df: DataFrame, group_col: str, item_col: str,

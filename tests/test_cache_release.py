@@ -1,5 +1,6 @@
 """cache.track/release: persisted intermediates are freed on demand."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators import dedup
@@ -107,3 +108,45 @@ def test_release_all_backstop(spark):
     assert _n_cached(spark) == 1
     assert release_all() >= 1
     assert _n_cached(spark) == 0
+
+
+def _nothing_left(spark):
+    from pipelines_rj_sms_spark.operators.cache import _LIVE
+    return not _LIVE and _n_cached(spark) == 0
+
+
+def test_kcore_failure_releases_edge_cache(spark):
+    """k_core hitting max_rounds leaves no cache behind."""
+    from pipelines_rj_sms_spark.operators.cache import release_all
+    from pipelines_rj_sms_spark.operators.graph import k_core
+
+    release_all()
+    spark.catalog.clearCache()
+    chain = [(100 + i, 101 + i) for i in range(12)]
+    df = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 100)] + chain,
+                               ["src", "dst"])
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        k_core(df, 2, max_rounds=3)
+    assert _nothing_left(spark)
+
+
+def test_logreg_failed_round_releases_design_frame(spark, monkeypatch):
+    """A training round that raises unpersists the design frame before
+    the error reaches the caller."""
+    from pipelines_rj_sms_spark.operators.cache import release_all
+    from pipelines_rj_sms_spark.operators.classify import \
+        logreg_hashed_train
+
+    release_all()
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [(i, "good clean prose" if i % 2 else "zz spam junk", i % 2)
+         for i in range(8)], "doc_id long, text string, y int")
+
+    def boom(self):
+        raise RuntimeError("round failed")
+    monkeypatch.setattr(type(df), "collect", boom)
+    with pytest.raises(RuntimeError, match="round failed"):
+        logreg_hashed_train(df, F.col("y") == 1, n_buckets=16, n_iter=2)
+    monkeypatch.undo()
+    assert _nothing_left(spark)

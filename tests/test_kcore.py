@@ -45,17 +45,31 @@ def test_kcore_long_pendant_chain_converges(spark):
     """A 12-node pendant chain hanging off a triangle sheds one tip
     per round — needs ~12 peel rounds, more than the old fixed-8
     schedule. Fixpoint detection must fully dissolve the chain."""
-    chain = [(100 + i, 101 + i) for i in range(12)]
-    edges = [(1, 2), (2, 3), (1, 3), (3, 100)] + chain
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["degree"] for r in k_core(df, 2).collect()}
+    got = {r["node"]: r["degree"]
+           for r in k_core(_pendant_chain(spark, 12), 2).collect()}
     assert got == {1: 2, 2: 2, 3: 2}
 
 
 def test_kcore_raises_when_rounds_exhausted(spark):
     import pytest
-    chain = [(100 + i, 101 + i) for i in range(12)]
-    edges = [(1, 2), (2, 3), (1, 3), (3, 100)] + chain
-    df = spark.createDataFrame(edges, ["src", "dst"])
     with pytest.raises(RuntimeError, match="fixpoint"):
-        k_core(df, 2, max_rounds=3)
+        k_core(_pendant_chain(spark, 12), 2, max_rounds=3)
+
+
+def _pendant_chain(spark, n):
+    chain = [(100 + i, 101 + i) for i in range(n)]
+    edges = [(1, 2), (2, 3), (1, 3), (3, 100)] + chain
+    return spark.createDataFrame(edges, ["src", "dst"])
+
+
+def test_kcore_steady_round_runs_at_most_two_jobs(spark, count_jobs):
+    """Each extra chain node costs one more peel round; a steady round
+    is the alive-set broadcast plus the checkpoint that counts the new
+    alive set — no separate probe count(), no extra broadcast job."""
+    short, long_ = _pendant_chain(spark, 6), _pendant_chain(spark, 12)
+    out_s, jobs_s = count_jobs(lambda: k_core(short, 2))
+    out_l, jobs_l = count_jobs(lambda: k_core(long_, 2))
+    assert sorted(r["node"] for r in out_s.collect()) == [1, 2, 3]
+    assert sorted(r["node"] for r in out_l.collect()) == [1, 2, 3]
+    assert jobs_s > 0
+    assert jobs_l - jobs_s <= 2 * 6, (jobs_s, jobs_l)

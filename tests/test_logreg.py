@@ -1,5 +1,8 @@
 """Hashed logistic regression (operators/classify.py logreg_*)."""
 
+import hashlib
+import random
+
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.classify import (
@@ -17,6 +20,66 @@ def _train(df, **kw):
     kw.setdefault("n_buckets", 64)
     kw.setdefault("n_iter", 6)
     return logreg_hashed_train(df, F.col("y") == 1, "text", "doc_id", **kw)
+
+
+def _synthetic_docs(n=240, seed=7):
+    """n docs over a 3000-word random vocabulary: positives draw from
+    the first 1800 words, negatives from the last 1800."""
+    rng = random.Random(seed)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    vocab = ["".join(rng.choice(letters) for _ in range(rng.randint(3, 8)))
+             for _ in range(3000)]
+    docs = []
+    for i in range(n):
+        y = i % 2
+        pool = vocab[:1800] if y else vocab[1200:]
+        docs.append((i, " ".join(rng.choice(pool)
+                                 for _ in range(rng.randint(5, 40))), y))
+    return docs
+
+
+def test_logreg_weights_pinned(spark):
+    """Exact (b, wu) weights, recorded from the executor-side training
+    loop before the update moved to the driver."""
+    df = spark.createDataFrame(DOCS, "doc_id long, text string, y int")
+    w, _ = _train(df)
+    assert sorted(tuple(r) for r in w.collect()) == [
+        (-1, 125362), (0, -670375), (5, 460548), (8, -335188),
+        (9, -209826), (32, -335188), (48, 460548), (61, 460548),
+        (63, 460548)]
+
+
+def test_logreg_weights_pinned_wide_buckets(spark):
+    """2,298 live buckets out of 16,384: the weight lookup literal spans
+    the whole bucket range. Pinned by digest, recorded as above."""
+    df = spark.createDataFrame(_synthetic_docs(),
+                               "doc_id long, text string, y int")
+    w, _ = _train(df, n_buckets=16384)
+    got = sorted(tuple(r) for r in w.collect())
+    assert len(got) == 2298
+    assert got[:5] == [(-1, -1474), (1, -156), (4, 17676), (8, 5906),
+                       (21, -5595)]
+    assert hashlib.sha256(repr(got).encode()).hexdigest() == (
+        "b01171f12504bc8f6efb55d62e25d8c6e3909a6c5044d452cf665424b9a7ab54")
+
+
+def test_logreg_empty_corpus_trains_to_empty_frames(spark):
+    df = spark.createDataFrame([], "doc_id long, text string, y int")
+    w, feat = _train(df, n_iter=3)
+    assert w.collect() == []
+    assert logreg_score(feat, w).collect() == []
+
+
+def test_logreg_round_is_one_collect(spark, count_jobs):
+    """Training runs at call time, each round one collect (a shuffle-map
+    job and a result job under AQE) plus the design frame's exchange in
+    the first round; scoring then reads the cached frame with at most
+    the weights collect and its own result job."""
+    df = spark.createDataFrame(DOCS, "doc_id long, text string, y int")
+    (w, feat), jobs = count_jobs(lambda: _train(df, n_iter=4))
+    assert 0 < jobs <= 4 * 3 + 2, jobs
+    _, jobs = count_jobs(lambda: logreg_score(feat, w).collect())
+    assert jobs <= 2, jobs
 
 
 def test_logreg_separates_easy_corpus(spark):

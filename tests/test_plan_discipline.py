@@ -221,11 +221,8 @@ def test_every_query_plans_clean(spark):
                     "corpus_vocab_growth", "corpus_heaps_fit",
                     # 1-row vocab / domain-count / normalizer
                     # broadcasts per MW step (operators/curation.py
-                    # doremi_domain_weights — the logreg class)
+                    # doremi_domain_weights)
                     "doremi_domain_weights",
-                    # 1-row doc-count broadcast under each GD update
-                    # (operators/classify.py logreg_hashed_train)
-                    "logreg_quality_scores",
                     # k-row centroid frame under every vector (the
                     # sanctioned |C|-row pattern, similarity.py
                     # kmeans_lloyd)
