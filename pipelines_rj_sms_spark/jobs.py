@@ -9,24 +9,24 @@ that shape as one function over a declarative ``IngestionConfig``: a
 user of the reference moves a row of TABELAS_CONFIG here 1:1.
 
 Everything stays lazy until the single write action; quality gates run
-on the written result (count reconciliation, non-empty), mirroring the
-reference's alert-then-fail posture.
+on the write's own row count (non-empty) and on the files it added
+(count reconciliation), mirroring the reference's alert-then-fail
+posture.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.conform import (
     conform,
     ensure_columns,
     safe_cast_columns,
 )
-from pipelines_rj_sms_spark.quality.checks import CheckResult, non_empty, reconcile_counts
+from pipelines_rj_sms_spark.quality.checks import CheckResult, reconcile_counts
 from pipelines_rj_sms_spark.sinks import lakehouse
 from pipelines_rj_sms_spark.sources.files import read_csv_raw, sniff_separator
 from pipelines_rj_sms_spark.sources.formats import detect_encoding, read_dbf
@@ -38,6 +38,8 @@ class IngestionConfig:
 
     name: str                                  # logical table name
     source_format: str                         # csv | parquet | json | dbf | xlsx
+    # a CSV source is sniffed on the driver: it must be a local path
+    # (file, directory or glob) unless csv_sep and csv_encoding are set
     source_path: str
     sink_path: str
     dump_mode: str = "append"                  # append | overwrite
@@ -76,7 +78,7 @@ def _read_source(spark: SparkSession, cfg: IngestionConfig) -> DataFrame:
         return cfg.reader(spark, cfg)
     fmt = cfg.source_format.lower()
     if fmt == "csv":
-        sep = cfg.csv_sep or sniff_separator(spark, cfg.source_path)
+        sep = cfg.csv_sep or sniff_separator(_first_local_file(cfg.source_path))
         enc = cfg.csv_encoding or detect_encoding(_first_local_file(cfg.source_path))
         return read_csv_raw(spark, cfg.source_path, sep=sep, encoding=enc)
     if fmt == "parquet":
@@ -96,45 +98,39 @@ def _first_local_file(path_glob: str) -> str:
     import glob as _glob
     import os
 
-    if os.path.isfile(path_glob):
-        return path_glob
-    matches = sorted(_glob.glob(path_glob)) or sorted(
-        _glob.glob(os.path.join(path_glob, "*")))
+    if os.path.isdir(path_glob):
+        path_glob = os.path.join(path_glob, "*")
+    # like Spark's reader, skip directories and _SUCCESS-style files
+    matches = sorted(p for p in _glob.glob(path_glob) if os.path.isfile(p)
+                     and not os.path.basename(p).startswith("_"))
     if not matches:
         raise FileNotFoundError(path_glob)
     return matches[0]
 
 
 def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
-    """acquire -> conform -> (casts/contract) -> partitioned write -> verify."""
-    raw = _read_source(spark, cfg)
-    rows_read = raw.count()
+    """acquire -> conform -> (casts/contract) -> partitioned write -> verify.
 
-    df = conform(raw, source=cfg.name)
+    ``rows_read`` is counted by the write job, after conform (which keeps
+    rows). The reconciliation reads back only the files this load added.
+    """
+    df = conform(_read_source(spark, cfg), source=cfg.name)
     if cfg.run_id is not None:
-        from pyspark.sql import functions as F
-
         df = df.withColumn("_run_id", F.lit(cfg.run_id))
     if cfg.expected_columns:
         df = ensure_columns(df, cfg.expected_columns)
     if cfg.casts:
         df = safe_cast_columns(df, cfg.casts)
 
-    checks: list[CheckResult] = [non_empty(df)]
-    # untagged rows cannot be told apart after the write: keep the
-    # table's file listing so the read-back sees only this load's files
-    before = _table_files(spark, cfg.sink_path) if cfg.run_id is None else None
+    before = lakehouse.data_files(cfg.sink_path)
     # cfg.ts_col refers to the post-conform (cleaned) column name
-    lakehouse.write_table(df, cfg.sink_path, mode=cfg.dump_mode, ts_col=cfg.ts_col)
-
-    written = lakehouse.read_table(spark, cfg.sink_path)
-    if cfg.run_id is not None:
-        written = written.filter(written["_run_id"] == cfg.run_id)
-    else:
-        added = [f for f in written.inputFiles() if f not in before]
-        written = (spark.read.option("basePath", cfg.sink_path)
-                   .parquet(*added) if added else written.limit(0))
-    checks.append(reconcile_counts(rows_read, written, cfg.reconcile_tolerance))
+    rows_read = lakehouse.write_table(df, cfg.sink_path, mode=cfg.dump_mode,
+                                      ts_col=cfg.ts_col)
+    added = sorted(lakehouse.data_files(cfg.sink_path) - before)
+    written = (spark.read.option("basePath", cfg.sink_path).parquet(*added)
+               if added else df.limit(0))
+    reconciled = reconcile_counts(rows_read, written, cfg.reconcile_tolerance)
+    checks = [CheckResult("non_empty", rows_read > 0, {}), reconciled]
     if cfg.k_anon is not None:
         from pipelines_rj_sms_spark.quality.checks import (
             k_anonymity_violations)
@@ -144,15 +140,8 @@ def run_ingestion(spark: SparkSession, cfg: IngestionConfig) -> IngestionReport:
         checks.append(CheckResult(
             "k_anonymity", n_bad == 0,
             {"quasi": quasi, "k": k, "violating_groups": n_bad}))
-    rows_written = written.count()
-    return IngestionReport(cfg.name, rows_read, rows_written, checks)
-
-
-def _table_files(spark: SparkSession, path: str) -> set[str]:
-    try:
-        return set(lakehouse.read_table(spark, path).inputFiles())
-    except AnalysisException:  # first load: no table (or no files) yet
-        return set()
+    return IngestionReport(cfg.name, rows_read, reconciled.details["loaded"],
+                           checks)
 
 
 def run_many(spark: SparkSession, configs: list[IngestionConfig],

@@ -13,7 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.conform import with_date_partitions
 
@@ -23,20 +24,24 @@ PARTITION_COLS = ["ano_particao", "mes_particao", "data_particao"]
 def write_table(df: DataFrame, path: str, mode: str = "append",
                 ts_col: str | None = None,
                 partition: bool = True,
-                file_format: str = "parquet") -> None:
-    """K1/K2: write a batch to the lakehouse.
+                file_format: str = "parquet") -> int:
+    """K1/K2: write a batch to the lakehouse; returns the rows written,
+    counted by the write job itself (``observe``).
 
     mode='append'  -> add files to existing partitions
     mode='overwrite' -> replace only the partitions present in ``df``
-    Empty inputs short-circuit (Q9, utils/tasks.py:950-951).
+    Empty inputs short-circuit (Q9, utils/tasks.py:950-951) and return 0:
+    an empty unpartitioned overwrite would otherwise wipe the table.
     ``file_format``: any Spark batch sink built in to the distribution
     ("parquet" default; "orc" / "json" / "csv" verified) — the same
     dynamic-partition-overwrite semantics apply to all of them.
     """
     if df.isEmpty():
-        return
+        return 0
     if partition and ts_col is not None:
         df = with_date_partitions(df, ts_col)
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     # per-write dynamic overwrite (Spark 3.0+): self-contained even on a
     # session whose default is static — where mode('overwrite') to the
     # base path would silently delete every partition not in this batch
@@ -46,6 +51,7 @@ def write_table(df: DataFrame, path: str, mode: str = "append",
         if present:
             writer = writer.partitionBy(*present)
     writer.format(file_format).save(path)
+    return obs.get["rows"]
 
 
 def read_table(spark: SparkSession, path: str,
@@ -77,24 +83,23 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
     merge with the full partition span of the key.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    if updates.isEmpty():
-        return
     if ts_col is not None:
         updates = with_date_partitions(updates, ts_col)
     part_cols = [c for c in PARTITION_COLS if c in updates.columns]
     if not part_cols:
         raise ValueError("merge_upsert needs date-partition columns "
                          f"({PARTITION_COLS}); pass ts_col to derive them")
+    # the partitions the updates touch; collect() is bounded by the number
+    # of touched dates, not data size, and none means an empty batch (Q9)
+    touched = [tuple(r) for r in
+               updates.select(*part_cols).distinct().collect()]
+    if not touched:
+        return
     updates = updates.withColumn("_is_update", F.lit(1))
 
     if table_exists(path):
-        # partition-prune the target read to the updates' partitions;
-        # collect() here is bounded by the number of touched dates, not
-        # data size
-        touched = [tuple(r) for r in
-                   updates.select(*part_cols).distinct().collect()]
+        # partition-prune the target read to the updates' partitions
         existing = read_table(spark, path).withColumn("_is_update", F.lit(0))
         pred = F.lit(False)
         for vals in touched:
@@ -136,17 +141,22 @@ def partition_stats(spark: SparkSession, path: str) -> DataFrame:
     partitions worth rewriting. Metadata-only (directory listing), no
     data scan.
     """
-    rows = []
-    for dirpath, _dirs, files in os.walk(path):
-        parquet = [f for f in files if f.endswith(".parquet")]
-        if not parquet:
-            continue
-        sizes = [os.path.getsize(os.path.join(dirpath, f)) for f in parquet]
-        rel = os.path.relpath(dirpath, path)
-        rows.append((rel if rel != "." else "", len(sizes), sum(sizes),
-                     float(sum(sizes)) / len(sizes)))
+    by_dir: dict[str, list[int]] = {}
+    for f in sorted(data_files(path)):
+        rel = os.path.relpath(os.path.dirname(f), path)
+        by_dir.setdefault(rel if rel != "." else "", []).append(
+            os.path.getsize(f))
+    rows = [(rel, len(sizes), sum(sizes), float(sum(sizes)) / len(sizes))
+            for rel, sizes in by_dir.items()]
     return spark.createDataFrame(
         rows, "partition string, n_files int, total_bytes long, avg_file_bytes double")
+
+
+def data_files(path: str) -> set[str]:
+    """The table's Parquet data files, by a local directory listing (no
+    Spark job); empty when the table does not exist yet."""
+    return {os.path.join(d, f) for d, _dirs, files in os.walk(path)
+            for f in files if f.endswith(".parquet")}
 
 
 def compact_partitions(spark: SparkSession, path: str,
@@ -169,8 +179,6 @@ def compact_partitions(spark: SparkSession, path: str,
 
     Returns the number of partitions rewritten.
     """
-    from pyspark.sql import functions as F
-
     small_file_bytes = small_file_bytes or target_file_bytes // 2
     stats = [(r["partition"], r["total_bytes"]) for r in
              partition_stats(spark, path)
@@ -307,8 +315,6 @@ def scd2_merge(spark: SparkSession, path: str, updates: DataFrame,
     wrong for facts (use append + dedup-at-read there).
     """
     import shutil
-
-    from pyspark.sql import functions as F
 
     from pipelines_rj_sms_spark.operators.dedup import dedup_keep_last
 

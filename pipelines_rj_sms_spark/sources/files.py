@@ -72,13 +72,11 @@ def read_json_quarantine(spark: SparkSession, path: str,
     return good, bad
 
 
-def sniff_separator(spark: SparkSession, path: str,
-                    candidates: tuple[str, ...] = (",", ";")) -> str:
-    """F8: pick the separator with most hits on the first line."""
-    first = spark.read.text(path).limit(1).collect()
-    if not first:
-        return candidates[0]
-    line = first[0][0]
+def sniff_separator(path: str, candidates: tuple[str, ...] = (",", ";")) -> str:
+    """F8: pick the separator with most hits on the first line of the
+    local file ``path``, read on the driver (no Spark job)."""
+    with open(path, "rb") as f:
+        line = f.readline().decode("latin-1")
     return max(candidates, key=line.count)
 
 

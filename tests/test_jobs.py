@@ -1,6 +1,9 @@
 """End-to-end config-driven ingestion (SURVEY §3.1 entry point A)."""
 
+import os
 from pathlib import Path
+
+import pytest
 
 from pipelines_rj_sms_spark.jobs import IngestionConfig, run_ingestion, run_many
 
@@ -144,3 +147,62 @@ def test_k_anonymity_gate_flags_release(spark, tmp_path):
     kcheck = [c for c in rep.checks if c.name == "k_anonymity"][0]
     assert not kcheck.passed and kcheck.details["violating_groups"] == 1
     assert not rep.ok
+
+
+def _csv_cfg(tmp_path, body, run_id=None):
+    src = tmp_path / "batch.csv"
+    src.write_text(body)
+    return IngestionConfig(name="t", source_format="csv",
+                           source_path=str(src), sink_path=str(tmp_path / "lake"),
+                           ts_col="ts", csv_sep=",", csv_encoding="utf-8",
+                           run_id=run_id)
+
+
+@pytest.mark.parametrize("run_id", [None, "r1"])
+def test_empty_first_load_reports_instead_of_raising(spark, tmp_path, run_id):
+    """A header-only batch into a table that does not exist yet: the load
+    writes nothing (Q9), so no table directory appears, and the report
+    fails non_empty with 0 rows instead of raising on the read-back."""
+    cfg = _csv_cfg(tmp_path, "id,ts\n", run_id=run_id)
+    rep = run_ingestion(spark, cfg)
+    checks = {c.name: c.passed for c in rep.checks}
+    assert checks == {"non_empty": False, "count_reconciliation": True}
+    assert (rep.rows_read, rep.rows_written) == (0, 0)
+    assert not os.path.exists(cfg.sink_path)
+
+
+def test_retried_load_reconciles_against_its_own_rows(spark, tmp_path):
+    """The same append config run twice with one run_id, as a task retry
+    does: each report checks only the rows its own write added."""
+    cfg = _csv_cfg(tmp_path, "id,ts\n1,2024-01-01 00:00:00\n"
+                             "2,2024-01-02 00:00:00\n", run_id="r1")
+    reports = [run_ingestion(spark, cfg) for _ in range(2)]
+    for rep in reports:
+        assert rep.ok and (rep.rows_read, rep.rows_written) == (2, 2), rep
+    assert spark.read.parquet(cfg.sink_path).count() == 4
+
+
+@pytest.mark.parametrize("pattern", ["dir", "dir/*.csv"])
+def test_csv_source_dir_or_glob_is_sniffed_from_its_first_file(
+        spark, tmp_path, pattern):
+    src = tmp_path / "dir"
+    src.mkdir()
+    for i in (1, 2):
+        (src / f"part{i}.csv").write_text(f"id;ts\n{i};2024-01-01 00:00:00\n")
+    rep = run_ingestion(spark, IngestionConfig(
+        name="t", source_format="csv", source_path=str(tmp_path / pattern),
+        sink_path=str(tmp_path / "lake"), ts_col="ts"))
+    assert rep.ok and (rep.rows_read, rep.rows_written) == (2, 2), rep
+
+
+def test_load_into_existing_table_job_budget(spark, tmp_path, count_jobs):
+    """One load into an existing table runs at most 6 Spark jobs: CSV
+    header inference, the Q9 probe and the write (which counts the rows),
+    then the read-back of the load's own files. A new probe or a second
+    scan of the source or the table would break this."""
+    body = "id,ts\n1,2024-01-01 00:00:00\n2,2024-01-02 00:00:00\n"
+    run_ingestion(spark, _csv_cfg(tmp_path, body, run_id="r1"))
+    rep, jobs = count_jobs(lambda: run_ingestion(
+        spark, _csv_cfg(tmp_path, body, run_id="r2")))
+    assert rep.ok and rep.rows_written == 2
+    assert jobs <= 6, jobs

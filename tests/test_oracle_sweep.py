@@ -15,6 +15,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
+import __spark_entry__ as entry  # noqa: E402
 from verify_oracle import run_sweep  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.001")
@@ -27,9 +28,10 @@ def test_all_declared_queries_match_oracle(spark):
     n_pass, n_fail, n_rows_only, failures = run_sweep(
         spark, SF_DIR, verbose=False)
     assert n_fail == 0, "oracle mismatches:\n" + "\n".join(failures)
-    # every declared query ran; the rows-only set is the known,
-    # intentional non-SQL-expressible remainder
-    assert n_pass >= 90
+    # every declared query with an oracle passed; the rows-only set is
+    # the known, intentional non-SQL-expressible remainder
+    assert n_pass == (len(entry.queries())
+                      - len(entry.no_oracle_reasons()))
     # rows-only by design (see no_oracle_reasons()): zlib compression,
     # PCA's data-dependent training. BPE left this set in r10 — its
     # merge loop replays as a DuckDB recursive CTE.

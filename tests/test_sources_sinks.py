@@ -28,7 +28,7 @@ def test_read_csv_raw_all_string(spark, tmp_path):
 def test_sniff_separator(spark, tmp_path):
     p = tmp_path / "semi.csv"
     p.write_text("a;b;c\n1;2;3\n")
-    assert sniff_separator(spark, str(p)) == ";"
+    assert sniff_separator(str(p)) == ";"
 
 
 def test_read_fixed_width(spark, tmp_path):
@@ -151,6 +151,32 @@ def test_lakehouse_merge_upsert_partition_scoped(spark, tmp_path):
     merge_upsert(spark, path, empty, keys=["k"],
                  order_col="version", ts_col="ts")
     assert read_table(spark, path).count() == 4
+
+
+def test_lakehouse_merge_upsert_job_budget(spark, tmp_path, count_jobs):
+    """A merge into an existing table runs at most 5 Spark jobs (the
+    touched-partition collect first, then the pruned read and rewrite);
+    an empty batch into a new table writes nothing (Q9)."""
+    from pipelines_rj_sms_spark.sinks.lakehouse import merge_upsert
+
+    path = str(tmp_path / "merge_budget")
+
+    def mk(rows):
+        return spark.createDataFrame(rows, ["k", "version", "ts"]).select(
+            "k", "version", F.col("ts").cast("timestamp").alias("ts"))
+
+    merge_upsert(spark, path, mk([(1, 1, "2024-01-01 10:00:00")]).limit(0),
+                 keys=["k"], order_col="version", ts_col="ts")
+    assert not os.path.exists(path)
+    merge_upsert(spark, path, mk([(1, 1, "2024-01-01 10:00:00")]),
+                 keys=["k"], order_col="version", ts_col="ts")
+    _, jobs = count_jobs(lambda: merge_upsert(
+        spark, path, mk([(1, 2, "2024-01-01 10:00:00"),
+                         (2, 1, "2024-01-02 10:00:00")]),
+        keys=["k"], order_col="version", ts_col="ts"))
+    assert jobs <= 5, jobs
+    assert sorted(tuple(r) for r in read_table(spark, path)
+                  .select("k", "version").collect()) == [(1, 2), (2, 1)]
 
 
 def test_lakehouse_compact_partitions(spark, tmp_path):
