@@ -25,148 +25,20 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "flagship_pricing_summary",
-    "shipping_priority_top10",
-    "local_supplier_revenue",
-    "monitor_recent",
-    "revenue_by_brand",
-    "latest_order_per_customer",
-    "running_total_by_customer",
-    "stream_window_counts",
-    "sessionize_events",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "ngram_jaccard_pairs",
-    "simhash_near_dupes",
-    "text_quality_score",
-    "similarity_bruteforce",
-    "order_priority_exists",
-    "order_count_distribution",
-    "promo_revenue_share",
-    "cpf_validation",
-    "asof_purchase_signup",
-    "range_error_purchases",
-    "market_share",
-    "returned_items_top20",
-    "curate_documents",
-    "profit_by_nation_year",
-    "late_supplier_waits",
-    "ohlc_hourly_events",
-    "text_rolling_fingerprint",
-    "session_window_stats",
-    "train_test_split",
-    "gap_filled_hourly_counts",
-    "tfidf_top_terms",
-    # round 4 additions
-    "event_funnel_conversion",
-    "scd2_user_state_history",
-    "hourly_count_anomalies",
-    "bm25_search_results",
-    "bloom_filtered_orders",
-    "order_snapshot_diff",
-    "pagerank_part_supplier",
-    "embedding_label_cohesion",
-    # round 5: the heavy non-headline tail — iterative graph ops,
-    # O(buckets^2) regressions, rule mining, multi-join resolution —
-    # benched so quadratic regressions show up here, not in production
-    "supplier_cooccurrence_triangles",
-    "part_graph_kcore",
-    "part_copurchase_communities",
-    "event_type_robust_trend",
-    "brand_basket_rules",
-    "resolved_document_entities",
-    "doc_containment_pairs",
-    "contamination_check",
-    "winnow_overlap_pairs",
-    "leakage_safe_split",
-    "ann_recall_report",
-    "customer_rfm_segments",
-    "hourly_value_twap_carry",
-    "embedding_pca2_closed_form",
-    "hybrid_rrf_search",
-    "similarity_sq_int8",
-    "fs_linkage_scores",
-    "psi_value_drift",
-    "standardized_purchase_rates",
-    # round 9: exact-substring span dedup + LSH-index recall gate
-    "dedup_duplicate_spans",
-    "dedup_span_removed_docs",
-    "dedup_incremental_spans",
-    "dedup_lsh_recall_report",
-    # round 9 (session 2): multimodal + curation additions — one
-    # representative per new family member
-    "image_hamming_near_dupes",
-    "dsir_selected_docs",
-    "url_canonical_dedup",
-    "bitext_margin_pairs",
-    # round 11: one representative per new family member — the
-    # iterative trainers (GD logreg, Lloyd's k-means), the heaviest
-    # new LM (trigram KN), and the KN-percentile composition
-    "logreg_quality_scores",
-    "kmeans_embedding_clusters",
-    "doc_kn_trigram_logprob",
-    "ccnet_ppl_partition",
-]
+import __spark_entry__ as entry_mod  # noqa: E402
 
-
-# family buckets for the --full per-family budget rollup; first match
-# wins, fallback "relational" (the TPC-H-shape SQL core)
-_FAMILIES = [
-    ("dedup", ("dedup", "minhash", "simhash", "jaccard", "containment",
-               "winnow", "contamination", "negative_pairs", "image_",
-               "hamming", "url_", "audio")),
-    ("similarity", ("similarity", "ann_", "embedding", "hybrid_rrf", "rbo",
-                    "pca", "bitext")),
-    ("graph", ("pagerank", "graph", "kcore", "communities", "triangle", "link_prediction", "hits",
-               "cooccurrence", "copurchase", "resolved", "linked",
-               "fuzzy_pairs")),
-    ("text", ("doc_", "text_", "corpus", "tfidf", "bm25", "pmi", "bpe", "retrieval", "good_turing", "repetition",
-              "token", "nb_", "lang", "readability", "chunk", "unicode",
-              "feature_hash", "pii", "accent", "perplexity", "ccnet",
-              "logreg")),
-    ("sketch", ("sketch", "theta", "kll", "freq_", "bloom")),
-    ("streaming", ("stream", "replay", "session", "cdc", "dedup_user")),
-    ("sampling", ("sample", "split", "kfold", "packing", "budget",
-                  "corpus_mix", "dsir", "temperature")),
-    # markov/entropy-rate queries are timeseries-family; matched BEFORE
-    # quality-stats so its bare "entropy" substring can't claim them
-    # (first match wins — same family name, just earlier precedence)
-    ("analytics-timeseries", ("markov", "entropy_rate")),
-    ("quality-stats", ("psi", "drift", "anomal", "gesd", "benford", "t_test", "auc", "jsd", "dispersion", "runs_test", "ridge", "odds_mh", "kappa", "pettitt", "_bh", "partial_corr", "conformal", "hazard",
-                       "z_test", "ks_test", "mann_whitney", "spearman", "anova", "bootstrap", "randomization", "log_rank", "kruskal", "durbin", "jarque", "grubbs", "friedman", "rmst", "hits", "hellinger", "cohens", "cvm", "_eb", "wasserstein", "cuped", "_did", "breusch", "best_split", "elasticity", "negbin",
-                       "chi2", "target_encoding", "quantile_norm", "ordinal", "mcnemar", "forsythe", "mood",
-                       "trend", "cusum", "survival", "gumbel",
-                       "linkage", "mutual", "diversity", "profile",
-                       "quality", "contract", "reconcil", "freshness",
-                       "skew_report", "anonymity", "l_diversity",
-                       "fs_", "dp_", "calibration", "eval_report", "brier",
-                       "correlations", "zipf", "entropy",
-                       "compression")),
-    ("analytics-timeseries", ("twap", "ohlc", "interpolat", "gap_", "decomposition", "_acf", "lead_lag", "holt_winters", "ljung", "croston", "backtest", "hurst", "pacf",
-                              "asof", "range_", "overlap",
-                              "concurrent", "ewma", "seasonal",
-                              "growth", "retention", "funnel", "rfm", "markov", "ltv", "entropy_rate",
-                              "attribution", "decomposition",
-                              "concentration", "gini", "standardized", "fisher_price",
-                              "geohash", "density", "nearest",
-                              "timeline", "paths", "histogram",
-                              "winsorized", "mad_", "imputed",
-                              "percentile", "equi_depth", "scd2",
-                              "snapshot", "diff", "survival")),
-]
+HEADLINE = [name for name, q in entry_mod.CATALOG.items() if q.headline]
 
 
 def _family(name: str) -> str:
-    for fam, pats in _FAMILIES:
-        if any(p in name for p in pats):
-            return fam
-    return "relational"
+    """Bench family of a declared query, for the --full per-family
+    budget rollup; an undeclared name counts as "relational"."""
+    q = entry_mod.CATALOG.get(name)
+    return q.family if q else "relational"
 
 
 def run_full() -> None:
     from pipelines_rj_sms_spark.session import get_spark, load_tables
-    import __spark_entry__ as entry_mod
 
     sf_dir = os.environ.get("SPARK_GRAFT_FULL_SF_DIR",
                             "/root/testdata/sf0.01")
@@ -322,7 +194,6 @@ def _family_regressions(timings: dict, threshold: float = 0.30,
 
 def main() -> None:
     from pipelines_rj_sms_spark.session import get_spark
-    import __spark_entry__ as entry_mod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)

@@ -179,14 +179,18 @@ def read_parquet_normalized(spark: SparkSession, path: str):
 
 
 def _long_for_nanos_schema(path: str):
-    """Spark schema from the parquet footer with ns-timestamp cols as long."""
+    """Spark schema from the parquet footer with ns-timestamp cols as
+    long; a timestamp without a time zone maps to TIMESTAMP_NTZ, as
+    Spark's own parquet schema inference does."""
     import pyarrow.parquet as pq
     import pyarrow as pa
     from pyspark.sql import types as T
 
     def _to_spark(t) -> T.DataType:
         if pa.types.is_timestamp(t):
-            return T.LongType() if t.unit == "ns" else T.TimestampType()
+            if t.unit == "ns":
+                return T.LongType()
+            return T.TimestampType() if t.tz else T.TimestampNTZType()
         mapping = {
             pa.int8(): T.ByteType(), pa.int16(): T.ShortType(),
             pa.int32(): T.IntegerType(), pa.int64(): T.LongType(),

@@ -2,6 +2,7 @@
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.analytics import (
@@ -23,6 +24,7 @@ def _ev(spark, rows):
         ["user", "ts", "step", "eid"])
 
 
+@pytest.mark.slow
 def test_funnel_stages_ordered_prefix(spark):
     """Steps must happen in order; interleaved noise and repeats are
     fine; out-of-order steps don't advance."""
@@ -67,6 +69,7 @@ def test_funnel_counts_and_plan(spark):
     assert "BatchEvalPython" not in plan
 
 
+@pytest.mark.slow
 def test_cohort_retention_months(spark):
     df = spark.createDataFrame(
         [(1, datetime(2024, 1, 5)), (1, datetime(2024, 2, 5)),
@@ -152,6 +155,7 @@ def test_rolling_anomalies_zero_variance_null(spark):
     assert all(r["z"] is None for r in rows)  # constant series: no verdict
 
 
+@pytest.mark.slow
 def test_jaro_winkler_matches_duckdb_semantics(spark):
     """Pin the UDF to DuckDB's jaro_winkler_similarity on textbook and
     randomized pairs — the linkage score must replay cross-engine."""
@@ -249,6 +253,7 @@ def test_equi_depth_histogram_approx_within_rank_error(spark):
             b, approx.get(b, 0), exact[b])
 
 
+@pytest.mark.slow
 def test_resolve_entities_clusters_duplicates(spark):
     """Perturbed copies resolve to their source's entity; unrelated
     records keep their own id as entity."""
@@ -288,6 +293,7 @@ def test_standardized_rates_closed_form(spark):
     assert out["smr"] == 1.0
 
 
+@pytest.mark.slow
 def test_markov_transitions_hand_counts(spark):
     """One user path a->b->a->b, one path b->c: transition counts
     (a,b)=2 (b,a)=1 (b,c)=1; K=3 observed states; Laplace alpha=1:
@@ -489,6 +495,7 @@ def test_markov_entropy_deterministic_vs_independent(spark):
     assert abs(out2["predictability"]) < 0.02
 
 
+@pytest.mark.slow
 def test_levenshtein_ratio_banded_matches_exact_in_band(spark):
     """r12: the banded scorer (max_dist) returns the bit-identical
     ratio for in-band pairs, -1.0 (below every threshold in [0, 1])

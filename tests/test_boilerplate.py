@@ -1,5 +1,6 @@
 """remove_boilerplate_lines: corpus-level line-wise correction."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.curation import (
@@ -45,6 +46,7 @@ def test_boilerplate_min_docs_guard(spark):
     assert out == {0: "shared\na", 1: "shared\nb"}
 
 
+@pytest.mark.slow
 def test_boilerplate_partition_invariant_and_plan(spark):
     docs = _corpus(spark)
     a = {tuple(r) for r in remove_boilerplate_lines(

@@ -56,6 +56,7 @@ def _series(spark, n=50):
         .alias("v"))
 
 
+@pytest.mark.slow
 def test_global_id_consumers_release_all_blocks(spark):
     """Every operator built on operators/ids.py helpers must carry the
     persisted-base chain through its post-track transforms so

@@ -1,5 +1,6 @@
 """CCNet perplexity partition (operators/curation.py)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.curation import perplexity_partition
@@ -70,6 +71,7 @@ def test_partition_short_docs_emit_no_row_and_custom_labels(spark):
     assert {r["bucket_label"] for r in out} <= {"h", "m", "t"}
 
 
+@pytest.mark.slow
 def test_partition_is_partition_invariant(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     one = {tuple(r) for r in

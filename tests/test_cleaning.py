@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.functions.cleaning import (
@@ -84,6 +85,7 @@ def test_shorten_column_names_frame_dedup(spark):
     assert a != b and all(len(c) <= 26 for c in (a, b))  # _N suffix may add
 
 
+@pytest.mark.slow
 def test_normalize_unicode_nfc_composes(spark):
     import pytest
 

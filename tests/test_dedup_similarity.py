@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.dedup import (
@@ -544,6 +545,7 @@ def test_bitext_margin_pairs_mutual_matches(spark):
         assert 0.0 < r["cosine_sim"] <= 1.0
 
 
+@pytest.mark.slow
 def test_bitext_margin_pairs_partition_invariant(spark):
     import numpy as np
 
@@ -574,6 +576,7 @@ def test_bitext_margin_min_margin_filters(spark):
     assert len(strict) < len(all_pairs)
 
 
+@pytest.mark.slow
 def test_bitext_candidates_path_matches_brute_on_full_candidates(spark):
     """With the FULL candidate grid injected, the blocked path must
     reproduce the brute-force result exactly (same pinned cosines,

@@ -117,6 +117,7 @@ def test_profile_stats_partition_invariant(spark):
                                             scale=10**4))
 
 
+@pytest.mark.slow
 @needs_data
 def test_analytics_partition_invariant(spark):
     from pyspark.sql import functions as F
@@ -151,6 +152,7 @@ def test_analytics_partition_invariant(spark):
     _check(durs, lambda d: survival_curve(d, "dur", "e"))
 
 
+@pytest.mark.slow
 @needs_data
 def test_stats_twap_pagerank_partition_invariant(spark):
     from pyspark.sql import functions as F
@@ -183,6 +185,7 @@ def test_pca_train_partition_invariant(spark):
     assert models[0] == models[1]
 
 
+@pytest.mark.slow
 def test_det_sum_property_matches_exact_rational(spark):
     """Property: det_sum equals the EXACT rational sum of the
     floor-quantized addends (computed with Fraction — no float error)
@@ -209,6 +212,7 @@ def test_det_sum_property_matches_exact_rational(spark):
         assert outs == {expected}, (trial, outs, expected)
 
 
+@pytest.mark.slow
 def test_session3_stats_partition_invariant(spark):
     """Round-6 session-3 operators: every det-quantized / exact-
     integer statistic must be bit-identical under repartition(1) vs
@@ -283,6 +287,7 @@ def test_session3_stats_partition_invariant(spark):
     inv(surv, lambda d: nelson_aalen(d, "dur", "ev"))
 
 
+@pytest.mark.slow
 def test_session4_stats_partition_invariant(spark):
     """Round-6 session-4 operators: det-quantized / exact-integer
     statistics must be bit-identical under repartition(1) vs (64)."""

@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.curation import (
@@ -98,6 +99,7 @@ def test_dsir_poly_default_separates_portable_collision(spark):
     assert poly[1] > poly[2]          # poly default: true match wins
 
 
+@pytest.mark.slow
 def test_dsir_weights_partition_invariant(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string, is_t boolean")
     one = dsir_log_weights(df.coalesce(1), F.col("is_t"),
@@ -192,6 +194,7 @@ def test_feature_bucket_xxhash64_bounds_and_determinism(spark):
     assert a[-2] != a[-1]                 # middle-char change visible
 
 
+@pytest.mark.slow
 def test_dsir_log_weights_hash_fn_variants_consistent(spark):
     """All three bucket functions yield the same n_tokens/is_target
     (hash-invariant) and each is partition-invariant."""

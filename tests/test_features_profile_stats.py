@@ -4,6 +4,8 @@ query spellings; these pin hand-computed values and edge semantics)."""
 
 import math
 
+import pytest
+
 from pipelines_rj_sms_spark.operators.features import (target_encode_kfold,
                                                        target_encode_loo)
 from pipelines_rj_sms_spark.operators.terms import (corpus_vocabulary_report,
@@ -196,6 +198,7 @@ def test_mann_whitney_tie_correction(spark):
     assert abs(out["cliffs_delta"] - (-0.666667)) < 1e-6
 
 
+@pytest.mark.slow
 def test_ks_mwu_partition_invariance(spark):
     from pipelines_rj_sms_spark.quality.stats import (ks_two_sample,
                                                       mann_whitney_u)
@@ -236,6 +239,7 @@ def test_quantile_normalize_hand_computed(spark):
     assert out[("B", 30.0)] == 10.0 and out[("B", 40.0)] == 30.0
 
 
+@pytest.mark.slow
 def test_quantile_normalize_null_passthrough_and_invariance(spark):
     from pipelines_rj_sms_spark.operators.features import (
         quantile_normalize)
@@ -523,6 +527,7 @@ def test_randomization_test_null_when_identical(spark):
     assert out["p_value"] > 0.05
 
 
+@pytest.mark.slow
 def test_randomization_test_replayable(spark):
     from pipelines_rj_sms_spark.quality.stats import (
         randomization_test_mean_diff)
@@ -536,6 +541,7 @@ def test_randomization_test_replayable(spark):
     assert a == b
 
 
+@pytest.mark.slow
 def test_remaining_new_operators_partition_invariant(spark):
     # combine-order perturbation for the round-6 additions not already
     # pinned individually (same gate as tests/test_determinism.py)

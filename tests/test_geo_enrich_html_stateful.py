@@ -126,6 +126,7 @@ def test_html_sections_udf_explode(spark):
     assert out[2]["title"] == "Section B" and "Body B" in out[2]["body"]
 
 
+@pytest.mark.slow
 def test_stateful_sessionize(spark, tmp_path):
     from pipelines_rj_sms_spark.streaming.stateful import sessionize
 

@@ -46,6 +46,7 @@ def test_pagerank_matches_reference_iteration(spark):
         assert abs(got[v] - want[v]) < 1e-12
 
 
+@pytest.mark.slow
 def test_pagerank_dangling_mass_conserved(spark):
     # node 3 is dangling (no out-edges): total rank must still sum to 1
     df = spark.createDataFrame([(1, 3), (2, 3)], ["src", "dst"])

@@ -82,6 +82,7 @@ def test_store_participates_without_text_column(spark):
     release(accepted)
 
 
+@pytest.mark.slow
 def test_sig_agreement_estimates_jaccard(spark):
     sigs = _sig_store(spark, [(1, TXT), (2, NEAR), (3, OTHER)])
     a = sigs.filter("doc_id = 1").select(F.col("minhash").alias("_a"))

@@ -133,6 +133,7 @@ def test_execute_with_retry_deadlock_then_success():
             max_retries=5, backoff_s=0.0)
 
 
+@pytest.mark.slow
 def test_retry_real_lock_conflict_e2e(spark, derby):
     """execute_with_retry against a REAL engine lock conflict through
     the real JDBC driver (VERDICT r6 #6 / r7 order #7): connection A

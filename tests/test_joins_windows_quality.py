@@ -237,6 +237,7 @@ def test_t_closeness_report_hand_computed(spark):
     assert got["A"]["group_size"] == 10
 
 
+@pytest.mark.slow
 def test_mann_kendall_hand_computed(spark):
     from pipelines_rj_sms_spark.operators.analytics import (
         mann_kendall_test)

@@ -3,6 +3,7 @@
 import hashlib
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipelines_rj_sms_spark.operators.classify import (
@@ -96,6 +97,7 @@ def test_logreg_separates_easy_corpus(spark):
                for r in out.values())
 
 
+@pytest.mark.slow
 def test_logreg_weights_partition_invariant(spark):
     """Bit-identical weights at any partitioning — the integer-grid
     training contract."""
@@ -118,6 +120,7 @@ def test_logreg_intercept_present_and_zero_iter_is_half(spark):
     assert all(r["predicted"] == 1 for r in out)
 
 
+@pytest.mark.slow
 def test_logreg_training_reduces_logloss(spark):
     import math
 

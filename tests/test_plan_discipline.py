@@ -7,6 +7,8 @@ that silently de-optimizes a plan (e.g. a cast blocking pushdown, a
 missing broadcast) fails here even though results stay correct.
 """
 
+import pytest
+
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
@@ -85,10 +87,11 @@ def test_not_in_is_null_aware_broadcast_anti_never_nested_loop(spark):
     # NOT IN (subquery) is the classic nested-loop trap; with a
     # broadcastable inner side Spark must plan the null-aware
     # BroadcastHashJoin LeftAnti, never BroadcastNestedLoopJoin
-    plan = _plan(entry.queries()["supplier_cnt_by_part"](spark, SF))
-    assert "LeftAnti" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    for name in ("supplier_cnt_by_part", "customers_without_orders"):
+        plan = _plan(entry.queries()[name](spark, SF))
+        assert "LeftAnti" in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        assert "CartesianProduct" not in plan, name
     # IN (subquery) -> LeftSemi, same discipline
     plan = _plan(entry.queries()["heavy_red_suppliers"](spark, SF))
     assert "LeftSemi" in plan
@@ -121,6 +124,7 @@ def test_sampling_split_is_pure_projection(spark):
     assert "Join" not in plan
 
 
+@pytest.mark.slow
 def test_every_query_plans_clean(spark):
     """Suite-wide discipline sweep: no declared query may plan a
     cartesian product, a broadcast nested loop (except the two

@@ -55,6 +55,7 @@ def test_encode_plan_is_expression_only(emb, book):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+@pytest.mark.slow
 def test_adc_recall_vs_exact(spark, emb):
     """PQ(16x16) ADC top-10 must land inside the exact dot-product
     top-50 — lossy compression, bounded loss. (This corpus is
@@ -77,6 +78,7 @@ def test_adc_recall_vs_exact(spark, emb):
     assert len(approx & exact50) >= 8
 
 
+@pytest.mark.slow
 def test_codes_compress_the_scan(emb, book):
     """The ADC input is (id, codes): ~m ints per row, never the
     embedding column — pruned from the scan entirely."""
@@ -87,6 +89,7 @@ def test_codes_compress_the_scan(emb, book):
     assert "TakeOrderedAndProject" in plan
 
 
+@pytest.mark.slow
 def test_ivfadc_composes_and_prunes(spark, emb, book):
     """IVFADC: results come only from probed cells, and the scan input
     is (id, cell, codes) — embeddings pruned."""

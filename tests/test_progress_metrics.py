@@ -1,5 +1,7 @@
 """Tests: persisted progress state (O1), execution metrics/cost (O10)."""
 
+import pytest
+
 from pipelines_rj_sms_spark.operators.progress import (
     load_progress,
     record_done,
@@ -12,6 +14,7 @@ from pipelines_rj_sms_spark.plans.metrics import (
 )
 
 
+@pytest.mark.slow
 def test_progress_resumable(spark, tmp_path):
     state = str(tmp_path / "progress")
     cands = spark.createDataFrame(

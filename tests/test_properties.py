@@ -2,6 +2,7 @@
 invariants of the conform/dedup layer, driver-side (no Spark needed for
 the pure functions — fast hypothesis iteration)."""
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -85,6 +86,7 @@ def _uf_components(edges, nodes):
     return {n: min(members) for root, members in comp.items() for n in members}
 
 
+@pytest.mark.slow
 def test_connected_components_random_graphs_match_union_find(spark):
     import random
 

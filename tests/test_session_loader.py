@@ -105,6 +105,21 @@ def test_explicit_schema_fallback(spark, nanos_parquet):
     assert n_fallback == n_normal
 
 
+def test_footer_schema_matches_spark_timestamp_inference(spark, tmp_path):
+    """The footer-derived schema types each timestamp as Spark infers
+    it: tz-less micros -> TIMESTAMP_NTZ, UTC-adjusted micros ->
+    TIMESTAMP, nanos -> bigint under nanosAsLong."""
+    path = str(tmp_path / "ts_kinds.parquet")
+    us = [1_700_000_000_000_001, 1_700_000_600_000_002]
+    pq.write_table(pa.table({
+        "a": pa.array(us, pa.timestamp("us")),
+        "b": pa.array(us, pa.timestamp("us", tz="UTC")),
+        "c": pa.array([u * 1000 for u in us], pa.timestamp("ns")),
+    }), path)
+    assert _long_for_nanos_schema(path) == spark.read.parquet(path).schema
+
+
+@pytest.mark.slow
 def test_python_workers_resolve_package_from_neutral_cwd():
     """Executor Python workers must import pipelines_rj_sms_spark no
     matter the driver's cwd: a pandas-UDF kernel importing the package

@@ -179,6 +179,7 @@ def test_lakehouse_merge_upsert_job_budget(spark, tmp_path, count_jobs):
                   .select("k", "version").collect()) == [(1, 2), (2, 1)]
 
 
+@pytest.mark.slow
 def test_lakehouse_compact_partitions(spark, tmp_path):
     from pipelines_rj_sms_spark.sinks.lakehouse import (
         compact_partitions,
@@ -212,6 +213,7 @@ def test_lakehouse_compact_partitions(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_lakehouse_compact_sorted_files_carry_tight_stats(spark, tmp_path):
     """After compaction with sort_cols, each surviving file's min/max k
     range must not overlap another file's — the property that makes

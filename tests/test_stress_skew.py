@@ -55,6 +55,7 @@ def test_fixture_layout(spark, stress):
     assert docs.select("text").distinct().count() == layout["n_docs"]
 
 
+@pytest.mark.slow
 def test_curation_funnel_under_skew(spark, stress):
     from pipelines_rj_sms_spark.operators.cache import release
     from pipelines_rj_sms_spark.operators.curation import curate_documents
@@ -106,6 +107,7 @@ def test_domain_cap_under_skew(spark, stress):
     _skew_guard(spark, "domain_cap")
 
 
+@pytest.mark.slow
 def test_semantic_dedup_hot_cell_guard_and_split(spark, stress):
     from pipelines_rj_sms_spark.operators.similarity import (
         kmeans_lloyd, semantic_dedup)

@@ -1,5 +1,7 @@
 """TF-IDF term ranking: rarity beats frequency, determinism."""
 
+import pytest
+
 from pipelines_rj_sms_spark.operators.terms import tfidf_top_terms
 
 
@@ -286,6 +288,7 @@ def test_ngram_repetition_hand_computed(spark):
     assert (r2["n_grams"], r2["dup_frac"]) == (2, 0.0)
 
 
+@pytest.mark.slow
 def test_ngram_repetition_tie_breaks_lexicographic(spark):
     from pipelines_rj_sms_spark.operators.terms import ngram_repetition
     # "b a b a": bigrams [b a, a b, b a] -> counts {b a: 2, a b: 1};
@@ -302,6 +305,7 @@ def test_ngram_repetition_tie_breaks_lexicographic(spark):
     assert r2["top_gram"] == "a c"
 
 
+@pytest.mark.slow
 def test_kn_bigram_logprob_hand_computed(spark):
     import math
 
@@ -333,6 +337,7 @@ def test_kn_bigram_logprob_hand_computed(spark):
     assert 0 < pkn(3, 3, 1, 1) <= 1 and 0 < pkn(1, 1, 1, 1) <= 1
 
 
+@pytest.mark.slow
 def test_kn_novelty_signal_beats_add_one(spark):
     """The KN continuation count penalizes a word that only ever
     follows ONE context ('francisco' after 'san') when it shows up in
@@ -350,6 +355,7 @@ def test_kn_novelty_signal_beats_add_one(spark):
     assert out[900] < out[901]
 
 
+@pytest.mark.slow
 def test_kn_bigram_partition_invariant(spark):
     from pipelines_rj_sms_spark.operators.terms import kn_bigram_logprob
     docs = [(i, f"w{i % 5} w{(i + 1) % 7} w{i % 3} w{(i * 3) % 11}")
@@ -391,6 +397,7 @@ def test_kn_trigram_sharper_than_bigram_on_templated_text(spark):
     assert out[900] > out[901]
 
 
+@pytest.mark.slow
 def test_kn_trigram_partition_invariant(spark):
     from pipelines_rj_sms_spark.operators.terms import kn_trigram_logprob
     docs = [(i, f"w{i % 5} w{(i + 1) % 7} w{i % 3} w{(i * 3) % 11} w{i % 2}")

@@ -24,6 +24,7 @@ needs_data = pytest.mark.skipif(not os.path.isdir(SF_DIR),
                                 reason=f"no testdata at {SF_DIR}")
 
 
+@pytest.mark.slow
 @needs_data
 def test_no_oracle_output_lands_on_rounding_tie():
     import duckdb

@@ -1,5 +1,7 @@
 import collections
 
+import pytest
+
 from pipelines_rj_sms_spark.operators.tokenizer import (
     bpe_encode_udf, bpe_train, word_freq_table)
 
@@ -85,6 +87,7 @@ def test_bpe_encode_unseen_word_falls_back_to_chars(spark):
     assert toks == ["x", "y", "z", "</w>", "low", "</w>"]
 
 
+@pytest.mark.slow
 def test_bpe_batched_rounds_match_sequential(spark):
     """Batched training (max_batch=16) must be bit-identical to the
     one-merge-per-round trainer AND the reference, in far fewer
